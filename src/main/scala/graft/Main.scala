@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.topology.{BuiltinComponents, Topology}
+import graft.topology.Topology
 
 /** CLI entry point — the reference's MainCLI (baker_cli.go:29-103):
   *
@@ -56,21 +56,17 @@ object Main {
     case Right(f) if f.verbose && f.quiet =>
       System.err.println("logging can't both be verbose and quiet") // baker_cli.go:74
       sys.exit(1)
-    case Right(f) if f.help.isDefined => f.help.get match {
-      case None | Some("*") =>
-        println(BuiltinComponents.all.renderHelp)
-      case Some(name) =>
-        val c = BuiltinComponents.all
-        val one = (c.inputs ++ c.filters ++ c.outputs ++ c.uploads)
-          .filter(_.name.equalsIgnoreCase(name))
-        if (one.isEmpty) { System.err.println(s"unknown component: $name"); sys.exit(1) }
-        one.foreach { d =>
-          println(s"### ${d.name}\n\n${d.help}\n")
-          d.keys.foreach(k => println(
-            s"- ${k.name}${if (k.required) " (required)" else ""}: ${k.help}" +
-              k.default.map(v => s" [default: $v]").getOrElse("")))
-        }
-    }
+    case Right(f) if f.help.isDefined =>
+      // document the registry the run path resolves names in, so a name
+      // shows the descriptor find-first lookup picks (SQS = file watch)
+      val c = graft.streaming.Streaming.componentsWithStreaming.resolved
+      f.help.get.filter(_ != "*") match {
+        case None => println(c.renderHelp)
+        case Some(name) =>
+          val one = c.named(name).renderHelp
+          if (one.isEmpty) { System.err.println(s"unknown component: $name"); sys.exit(1) }
+          println(one)
+      }
     case Right(f) if f.toml.isEmpty =>
       System.err.println(
         "usage: graft.Main [-v|-q] [-pretty] [-pprof host:port] <topology.toml> | -help [component|'*']")
@@ -87,9 +83,8 @@ object Main {
       new graft.metrics.StatsDumper().attach(spark)
       try {
         val t0 = System.nanoTime()
-        val components = graft.streaming.Streaming.componentsWithStreaming
-        val compiled = Topology.compile(spark,
-          Topology.configFromToml(graft.topology.Toml.parseFile(tomlPath)), components)
+        val compiled = Topology.compileFile(spark, tomlPath,
+          graft.streaming.Streaming.componentsWithStreaming)
         if (compiled.projected.isStreaming) {
           // daemon topology (reference: api.go:58-66): run until signalled
           val ckpt = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",

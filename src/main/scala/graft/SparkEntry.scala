@@ -972,8 +972,8 @@ object SparkEntry {
       leBytes(lit(16), 2), lit("data".getBytes), leBytes(dataLen, 4), data)
 
   // package-visible: the canonical BMP-header builder for every
-  // perceptual fixture (queries, ProfTrainScale/ProfVideoCost probes,
-  // PerceptualDaemonSpec) — a padding/size change lands everywhere
+  // perceptual fixture (queries, PerceptualDaemonSpec) — a padding/size
+  // change lands everywhere
   private[graft] def bmpHeader(w: Int, h: Int): Array[Byte] = {
     def le32(v: Int) =
       Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
@@ -1036,8 +1036,7 @@ object SparkEntry {
     * documents supply only pixel bytes; every container byte is fixed,
     * so the video is column algebra around two BMP bodies.
     */
-  // package-visible for the ProfVideoCost attribution probe
-  private[graft] lazy val mp4VideoFixture: (Array[Byte], Array[Byte]) = {
+  private lazy val mp4VideoFixture: (Array[Byte], Array[Byte]) = {
     def be32(v: Int): Array[Byte] = Array(((v >> 24) & 0xFF).toByte,
       ((v >> 16) & 0xFF).toByte, ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
     def box(typ: String, content: Array[Byte]*): Array[Byte] = {
@@ -2790,7 +2789,7 @@ object SparkEntry {
       // EXACT shingle-Jaccard — the decision is exact, so the DuckDB oracle
       // (all-pairs exact Jaccard) reproduces it as long as the bands catch
       // every true pair (they do at the 0.7 threshold: est-jaccard recall
-      // is asserted in DedupSimilaritySpec and probed in Scratch)
+      // is asserted in DedupSimilaritySpec and was probed in d8abf3c)
       Dedup.minhashDedupVerified(t(s, d, "documents"), "doc_id", "text", threshold = 0.7)
         .select("doc_id")
         .orderBy("doc_id")),
@@ -3525,7 +3524,7 @@ object SparkEntry {
       // the store) and NEGATED copies (cosine −1 to their source, ≤0.51
       // to everything else on this corpus — must survive)
       // note: a query-side .persist() of this 4×-scanned projection was
-      // measured and REJECTED (ProfEmbedDedup): the cached variant is
+      // measured and REJECTED (9686ff3): the cached variant is
       // 2-3× slower here — the InMemoryTableScan loses whole-stage fusion
       // with the per-branch filters, and the cache boundary multiplies
       // AQE broadcast sub-jobs, which dominate at this corpus size. The

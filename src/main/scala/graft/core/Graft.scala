@@ -14,16 +14,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Standard conf applied to any session graft builds or adopts. */
+  /** The runtime-settable confs of every session graft builds or adopts:
+    * `configure` sets them on a builder and `tune` on a live session, so
+    * Verify/Bench sessions plan with the same knobs the tests pin. The
+    * 64 MB broadcast threshold matters most: at Spark's 10 MB default,
+    * dimension tables this threshold broadcasts would be shuffle-joined.
+    */
+  val sessionConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // parquet TIMESTAMP(NANOS) (e.g. the events table) is otherwise illegal
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+  )
+
+  /** Standard conf applied to any session graft builds. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+    sessionConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** Local session for tests/benchmarks. */
   def localSession(appName: String = "graft", cores: Int = 32): SparkSession = {
@@ -47,20 +57,7 @@ object Graft {
     * driver's Verify/Bench sessions) without rebuilding it.
     */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    // parquet TIMESTAMP(NANOS) (e.g. the events table) is otherwise illegal
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the runtime-settable half of configure(): an adopted session must
-    // plan with the same AQE + broadcast-threshold knobs the tests pin,
-    // or Verify/Bench run different physical plans than the suite audits
-    // (the default 10 MB threshold shuffle-joins dimension tables the
-    // 64 MB setting broadcasts)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      (64L * 1024 * 1024).toString)
+    for ((k, v) <- sessionConfs) spark.conf.set(k, v)
     // SQL surface (graft_* functions) on adopted sessions too
     graft.GraftFunctions.register(spark)
     spark
@@ -76,26 +73,6 @@ object Graft {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events" && df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
-
-  /** Adaptive input fan-out — the optimization guide's §2.5 input-skew
-    * case ("one huge unsplittable file ... repartition immediately after
-    * the read"): when a scan plans FEWER partitions than half the
-    * session's default parallelism, expensive per-row map work above it
-    * (shingling, tokenizing, media decode) runs on a handful of tasks
-    * while the rest of the cluster idles — so spread it with one
-    * round-robin exchange. A real multi-file corpus scan (the 100 TB
-    * layout: thousands of ≥128 MB splits) always plans at least
-    * cluster parallelism, so this is a NO-OP there; it fires only on
-    * degenerate inputs (single small file, single gzip member). Call it
-    * on scan-level frames only — `.rdd.getNumPartitions` is pure
-    * planning for exchange-free plans, but would execute query stages
-    * through an AQE exchange.
-    */
-  def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(1, target / 2)) df.repartition(target)
     else df
   }
 

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Replaces the composed form
   * `HfEncode.bpeIds(Bpe.docSymbols(array_join(enc, "|")), …)`, which the
-  * ProfHfKernel probe measured as ~70% of the q_tokenize_hf_import row:
+  * probe recorded in 2a2c379 measured as ~70% of the q_tokenize_hf_import row:
   * array_join copies the document into one string, docSymbols copies it
   * again (replace) and a third time (split), and explicitIds maps every
   * token through an interpreted higher-order `transform` whose lambda

@@ -122,8 +122,8 @@ object HfEncode {
     * walk ([[graft.functions.HfBpeIds]]) — semantics identical
     * (HfTokenizerSpec pins equality); the composed form copies the
     * document three times (join, replace, split) and maps every token
-    * through an interpreted higher-order transform, which ProfHfKernel
-    * measured as ~70% of the imported-BPE tokenize row.
+    * through an interpreted higher-order transform, measured in 2a2c379
+    * as ~70% of the imported-BPE tokenize row.
     */
   def bpeIdsOfWords(encodedWords: Column, vocab: Seq[(String, Int)], unk: Int,
       byteFallback: Boolean, fuseUnk: Boolean): Column =

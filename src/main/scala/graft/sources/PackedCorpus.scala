@@ -399,12 +399,6 @@ object PackedCorpus {
     (sizes, pointers, docIdx.dropRight(1), dtype)
   }
 
-  private[sources] def readShortLE(in: InputStream): Int = {
-    val lo = in.read(); val hi = in.read()
-    if (lo < 0 || hi < 0) throw new EOFException("PackedCorpus: truncated file")
-    (hi << 8) | lo
-  }
-
   /** Input-corpus layout probe shared by the corpus-to-corpus rewrites
     * ([[reshuffle]], [[rewriteExcluding]]): which channels exist, and the
     * token width sniffed off the first sidecar (so a uint16 corpus never

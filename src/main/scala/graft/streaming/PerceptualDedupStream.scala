@@ -181,32 +181,3 @@ object PerceptualDedupStream {
       .start()
   }
 }
-
-/** Pre-r13 name of [[PerceptualDedupStream]] — the store was always
-  * signature-generic (any 64-bit Hamming signature: image pHash/dHash/
-  * aHash, audio fingerprint, video folds), so the image-specific name
-  * undersold it. Kept as a thin alias for existing callers.
-  */
-@deprecated("use PerceptualDedupStream", "r13")
-object ImageDedupStream {
-  def batchFunction(idCol: String, sigOf: DataFrame => DataFrame,
-      storeDir: String, corpusDir: String, nBits: Int = 64, maxHamming: Int = 3,
-      maxBucketSize: Int = 0, pieces: Int = 1, runTag: String = "run")
-      : (DataFrame, Long) => Long =
-    PerceptualDedupStream.batchFunction(idCol, sigOf, storeDir, corpusDir,
-      nBits, maxHamming, maxBucketSize, pieces, runTag)
-
-  def compactStore(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    PerceptualDedupStream.compactStore(spark, dir, targetFiles)
-
-  def deleteObjects(spark: SparkSession, storeDir: String, corpusDir: String,
-      idCol: String, ids: DataFrame): (Long, Long) =
-    PerceptualDedupStream.deleteObjects(spark, storeDir, corpusDir, idCol, ids)
-
-  def start(docs: DataFrame, idCol: String, sigOf: DataFrame => DataFrame,
-      storeDir: String, corpusDir: String, checkpointDir: String,
-      nBits: Int = 64, maxHamming: Int = 3, maxBucketSize: Int = 0,
-      pieces: Int = 1): StreamingQuery =
-    PerceptualDedupStream.start(docs, idCol, sigOf, storeDir, corpusDir,
-      checkpointDir, nBits, maxHamming, maxBucketSize, pieces)
-}

@@ -1500,7 +1500,7 @@ object BuiltinComponents {
       }
       codec.foreach(c => dfw = dfw.option("compression", c))
       if (hasField0) dfw = dfw.partitionBy("__part")
-      Profiling("filewriter.writeJob")(dfw.text(staging.toString))
+      dfw.text(staging.toString)
 
       // move task part files into template-expanded final paths
       val now = Instant.ofEpochMilli(System.currentTimeMillis()).atZone(ZoneOffset.UTC)
@@ -1524,10 +1524,8 @@ object BuiltinComponents {
           case _ => Nil
         }
       val written = Seq.newBuilder[String]
-      val byDir = Profiling("filewriter.list")(
-        partFiles(staging).groupBy(_.getPath.getParent.getName))
-      val rows = Profiling("filewriter.rowsObs")(obs.get("rows").asInstanceOf[Long])
-      Profiling("filewriter.movePass") {
+      val byDir = partFiles(staging).groupBy(_.getPath.getParent.getName)
+      val rows = obs.get("rows").asInstanceOf[Long]
       for ((dirName, files) <- byDir) {
         val field0 = if (dirName.startsWith("__part=")) dirName.stripPrefix("__part=") else ""
         files.sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, ix) =>
@@ -1549,7 +1547,6 @@ object BuiltinComponents {
         }
       }
       fs.delete(staging, true)
-      }
       OutputResult(written.result().distinct, rows)
     },
   )

@@ -93,14 +93,6 @@ final case class ComponentConfig(raw: Map[String, Any], componentName: String = 
     case Some(other) => throw new IllegalArgumentException(
       s"$componentName: '$key' is not a table: $other")
   }
-  /** Duration string ("60s", "5m", "-1") → seconds. */
-  def durationSec(key: String, default: => Long): Long = any(key) match {
-    case None            => default
-    case Some(l: Long)   => l
-    case Some(s: String) => ComponentConfig.parseDuration(s)
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a duration: $other")
-  }
 
   /** Reject unknown keys (reference: config.go:403-406) and missing
     * required ones (config.go:555-567).
@@ -318,6 +310,22 @@ final case class Components(
       throw new IllegalArgumentException(
         s"user configuration does not exist: '$name'; " +
           s"registered: ${user.map(_.name).mkString(", ")}"))
+
+  /** The registry as lookup sees it: per kind, only the first descriptor
+    * of each name survives, since `find` never reaches a shadowed one.
+    */
+  def resolved: Components = {
+    def firsts[T <: ComponentDesc](xs: Seq[T]) = xs.distinctBy(_.name.toLowerCase)
+    Components(firsts(inputs), firsts(filters), firsts(outputs),
+      firsts(uploads), firsts(metrics), firsts(user))
+  }
+
+  /** The descriptors called `name` (case-insensitive), of every kind. */
+  def named(name: String): Components = {
+    def only[T <: ComponentDesc](xs: Seq[T]) = xs.filter(_.name.equalsIgnoreCase(name))
+    Components(only(inputs), only(filters), only(outputs),
+      only(uploads), only(metrics), only(user))
+  }
 
   def ++(other: Components): Components = Components(
     inputs ++ other.inputs, filters ++ other.filters,

@@ -268,7 +268,7 @@ object Tokenize {
         val enc = graft.llm.Bpe.encodeWordsNative(words, merges)
         // one native walk for the symbols → explicit-ids tail; the
         // composed docSymbols + bpeIds form re-copied the document three
-        // times and ran an interpreted per-token lambda (ProfHfKernel)
+        // times and ran an interpreted per-token lambda (see 2a2c379)
         graft.llm.HfEncode.bpeIdsOfWords(enc, vocab,
           resolveUnkId(cfg, fileUnk), byteFb, fuseUnk)
       case graft.llm.HfUnigramModel(pieces, fileUnk) =>

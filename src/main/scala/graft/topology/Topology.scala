@@ -204,7 +204,7 @@ object Topology {
       val t0 = System.nanoTime()
       val outDesc = components.output(cfg.outputName)
       cfg.outputConfig.validate(outDesc.keys)
-      val result = Profiling("output.build")(outDesc.build(ctx, cfg.outputConfig, projected))
+      val result = outDesc.build(ctx, cfg.outputConfig, projected)
       for ((name, upCfg) <- cfg.upload) {
         val upDesc = components.upload(name)
         upCfg.validate(upDesc.keys)
@@ -229,11 +229,9 @@ object Topology {
       // 2 ms granularity: the listener usually lands within single-digit
       // ms of the action, and a coarser sleep adds its whole quantum to
       // every batch run's wall-clock
-      Profiling("obs.wait") {
-        while (snaps.exists(_.isEmpty) && System.nanoTime() < deadline) {
-          Thread.sleep(2)
-          snaps = observations.values.map(readObs)
-        }
+      while (snaps.exists(_.isEmpty) && System.nanoTime() < deadline) {
+        Thread.sleep(2)
+        snaps = observations.values.map(readObs)
       }
       val metrics = snaps.fold(Map.empty[String, Any])(_ ++ _)
       // topology-level counters, published once per run (stats.go:131-139
@@ -435,8 +433,7 @@ object Topology {
   def compileToml(spark: SparkSession, toml: String,
       components: Components = BuiltinComponents.all,
       env: Map[String, String] = sys.env): Compiled =
-    Profiling("topology.compile")(
-      compile(spark, configFromToml(Toml.parse(toml, env)), components))
+    compile(spark, configFromToml(Toml.parse(toml, env)), components)
 
   def compileFile(spark: SparkSession, path: String,
       components: Components = BuiltinComponents.all): Compiled =

@@ -23,6 +23,16 @@ class CliSpec extends AnyFunSuite {
     assert(Main.parse(List("a.toml", "b.toml")).isLeft)
   }
 
+  test("-help NAME documents the descriptor a run resolves the name to") {
+    // a Main run resolves SQS to the file-watch input, not the batch one
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Main.main(Array("-help", "SQS")))
+    val help = out.toString("UTF-8")
+    assert(help.contains("### SQS"), help)
+    assert(help.contains("QueuePath"), help)
+    assert(!help.contains("AwsRegion"), help)
+  }
+
   test("-pprof server: /debug/stacks dumps thread stacks") {
     val addr = Diagnostics.serve("localhost:")
     val url = new java.net.URI(

@@ -4,9 +4,10 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** [[ProfQuery]] over several queries in one JVM/session (one sbt start,
-  * one session warmup): per query, cold + steady wall, stage count, stage
-  * wall sum and task-time sum, plus the top stages of the cold run.
+/** Per-query cost probe over several declared queries in one JVM/session
+  * (one sbt start, one session warmup): per query, cold + steady wall,
+  * stage count, stage wall sum and task-time sum, plus the top stages of
+  * the cold run.
   * Usage: Test/runMain graft.ProfMany q_a q_b ... [last arg may be an sf dir]
   */
 object ProfMany {
